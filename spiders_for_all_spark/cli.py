@@ -187,11 +187,12 @@ def add_crawl_args(ap: argparse.ArgumentParser) -> None:
     ap.add_argument("--warehouse", default=None)
     ap.add_argument("--budget", type=int, default=2)
     ap.add_argument("--rounds", type=int, default=30)
-    ap.add_argument("--bloom", action="store_true")
-    ap.add_argument("--bloom-partitioned", action="store_true",
-                    help="cogrouped bloom probe (no driver broadcast)")
+    ap.add_argument("--bloom", action="store_true",
+                    help="partitioned bloom seen-prefilter: one cogrouped "
+                    "probe + O(delta) cogrouped insert, no broadcast path")
     ap.add_argument("--cuckoo", action="store_true",
-                    help="deletable cuckoo seen-prefilter (re-crawl eviction)")
+                    help="deletable cuckoo seen-prefilter (re-crawl "
+                    "eviction); same probe and insert shape as --bloom")
     ap.add_argument("--salt-n", type=int, default=1)
     ap.add_argument("--synthetic", action="store_true",
                     help="generate a deterministic site + seeds")
@@ -208,6 +209,16 @@ def run_crawl(spark: SparkSession, ns: argparse.Namespace) -> dict:
     from spiders_for_all_spark.sources.idlist import ids_from_text_file
     from spiders_for_all_spark.storage import SnapshotStorage
 
+    try:
+        cfg = CrawlConfig(
+            max_rounds=ns.rounds,
+            default_budget=ns.budget,
+            use_bloom=ns.bloom,
+            use_cuckoo=ns.cuckoo,
+            salt_n=ns.salt_n,
+        )
+    except ValueError as exc:
+        raise SystemExit(f"crawl: {exc}") from None
     if ns.synthetic:
         rows, seeds = FX.build_site(n_hosts=4, pages_per_chain=3, seed=42)
         site = os.path.join(tempfile.mkdtemp(prefix="sfas_job_"),
@@ -235,19 +246,7 @@ def run_crawl(spark: SparkSession, ns: argparse.Namespace) -> dict:
 
     warehouse = ns.warehouse or tempfile.mkdtemp(prefix="sfas_wh_")
     storage = SnapshotStorage(spark, warehouse)
-    crawler = Crawler(
-        spark,
-        storage,
-        SyntheticFetcher(site),
-        CrawlConfig(
-            max_rounds=ns.rounds,
-            default_budget=ns.budget,
-            use_bloom=ns.bloom or ns.bloom_partitioned,
-            bloom_partitioned=ns.bloom_partitioned,
-            use_cuckoo=ns.cuckoo,
-            salt_n=ns.salt_n,
-        ),
-    )
+    crawler = Crawler(spark, storage, SyntheticFetcher(site), cfg)
     stats = crawler.run(seeds=seeds)
     return {
         "rounds": len(stats.rounds),

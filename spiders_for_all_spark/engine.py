@@ -4,8 +4,9 @@ Replaces the reference's ``run() = before(); save_items(get_items()); after``
 driver (reference: core/spider.py:245-248,295-327) with the round loop of
 SURVEY §3.1:
 
-    frontier -> anti-join seen (exact | incremental bloom | deletable
-                cuckoo, each + exact-confirm; eviction tombstones subtracted)
+    frontier -> anti-join seen (exact | partitioned bloom | deletable
+                cuckoo: one cogrouped probe + exact-confirm for both
+                filters, no broadcast path; eviction tombstones subtracted)
              -> robots gate (broadcast join)
              -> politeness window top-k per host (per-host salting for
                 hot hosts only)
@@ -16,7 +17,8 @@ SURVEY §3.1:
              -> documents MERGE (merge-on-read delta, upsert by doc_id)
              -> media_meta (payloads sniffed from sink files)
              -> successors/retries -> next frontier
-             -> seen += fetched; fetch_log += lineage; bloom |= delta
+             -> seen += fetched; fetch_log += lineage; filter += delta
+                (O(delta) cogrouped insert, bloom and cuckoo alike)
              -> ONE atomic multi-table snapshot commit (resumable
                 checkpoint, north_rule); periodic compaction + expiry
 
@@ -51,28 +53,16 @@ class CrawlConfig:
     max_depth: int = 3
     total_doc_cap: int | None = None  # A2: global stop condition
     salt_n: int = 1  # >1 enables two-phase salted scheduling
+    # seen prefilter (at most one): a partitioned bloom, or a cuckoo filter
+    # that supports DELETIONS, so re-crawl eviction (evict()) removes hashes
+    # from the probe filter itself rather than relying on the exact-confirm
+    # alone (north_star: "cuckoo-filter fallback for deletions").  Either is
+    # a committed per-bucket table: the round's seen DELTA is inserted
+    # cogrouped (O(delta)/round), evict() deletes cuckoo fingerprints in the
+    # same atomic flip as its tombstones, and a full rebuild+resize happens
+    # only at compaction.
     use_bloom: bool = False
-    # True routes the bloom probe through the cogrouped partition-wise path
-    # (dedup.seen_anti_join_bloom_partitioned): no driver collect/broadcast of
-    # the bitmap table — required once the bitmaps outgrow driver memory
-    # (~GBs at 10^10 keys); the broadcast path is faster while they fit.
-    bloom_partitioned: bool = False
-    # maintain the bloom as a committed table, OR-merging each round's
-    # seen-delta bloom (O(delta)/round) instead of re-scanning the full
-    # seen set per round; full rebuild + resize happens at compaction
-    bloom_incremental: bool = True
-    # cuckoo-filter seen prefilter instead of bloom: supports DELETIONS, so
-    # re-crawl eviction (evict()) removes hashes from the probe filter
-    # itself rather than relying on the exact-confirm alone (north_star:
-    # "cuckoo-filter fallback for deletions")
     use_cuckoo: bool = False
-    # maintain the cuckoo filter as a committed table (mirror of
-    # bloom_incremental): each round bulk-inserts just the seen DELTA
-    # cogrouped (O(delta)/round) instead of rebuilding the filter from the
-    # full seen set — the last O(|seen|)-per-round job in the engine
-    # (VERDICT r03 item 2); evict() deletes fingerprints in the same
-    # atomic flip as its tombstones; full rebuild+resize at compaction
-    cuckoo_incremental: bool = True
     n_buckets: int = D.DEFAULT_BUCKETS
     bloom_expected_per_bucket: int = 10_000
     cuckoo_capacity_per_bucket: int = 10_000
@@ -94,6 +84,12 @@ class CrawlConfig:
     # "Fixed per-round cost").  None = leave the session setting alone.
     round_aqe: bool | None = False
 
+    def __post_init__(self):
+        if self.use_bloom and self.use_cuckoo:
+            raise ValueError(
+                "use_bloom and use_cuckoo are exclusive: pick one seen filter"
+            )
+
 
 @dataclass
 class RoundStats:
@@ -113,6 +109,19 @@ class CrawlStats:
     @property
     def total_fetched(self) -> int:
         return sum(r.scheduled for r in self.rounds)
+
+
+def _seen_filter(cfg: CrawlConfig):
+    """The configured seen prefilter as (table, build, insert, probe,
+    per-bucket sizing floor), or None for the plain exact anti-join.  Looked
+    up through ``D`` on every call, never captured at import time."""
+    if cfg.use_cuckoo:
+        return ("cuckoo", D.build_cuckoo, D.cuckoo_insert,
+                D.seen_anti_join_cuckoo, cfg.cuckoo_capacity_per_bucket)
+    if cfg.use_bloom:
+        return ("bloom", D.build_bloom, D.bloom_insert,
+                D.seen_anti_join_bloom, cfg.bloom_expected_per_bucket)
+    return None
 
 
 def ok_cond():
@@ -243,7 +252,7 @@ class Crawler:
         cfg = self.config
         storage = self.storage
         frontier = storage.read("frontier")
-        seen_all = storage.read("seen")
+        seen = storage.read("seen")
         evicted = (
             storage.read("evicted")
             if storage.latest_snapshot("evicted") is not None
@@ -253,56 +262,30 @@ class Crawler:
         # subtraction joins a 10^10-row table against an O(pending
         # evictions) one — broadcast-cheap, and skipped entirely until the
         # first evict() call
-        seen = (
-            seen_all.join(F.broadcast(evicted), on="url_hash", how="left_anti")
-            if evicted is not None
-            else seen_all
-        )
+        if evicted is not None:
+            seen = seen.join(F.broadcast(evicted), on="url_hash", how="left_anti")
 
         # 1. J1 — seen anti-join (bloom/cuckoo prefilter + exact confirm at
-        # scale; the cuckoo path applies eviction DELETIONS to the filter)
-        if cfg.use_cuckoo:
-            if (
-                cfg.cuckoo_incremental
-                and storage.latest_snapshot("cuckoo") is not None
-            ):
-                # the filter was committed with last round's seen delta
-                # (and evict() already removed tombstoned fingerprints) —
-                # no O(|seen|) rebuild on the hot path
-                cuckoo = storage.read("cuckoo")
-            else:
-                cuckoo = D.build_cuckoo(
-                    seen_all, cfg.n_buckets, cfg.cuckoo_capacity_per_bucket
-                )
-                if evicted is not None:
-                    cuckoo = D.cuckoo_delete(cuckoo, evicted, cfg.n_buckets)
-            candidates = D.seen_anti_join_cuckoo(
-                frontier, seen, cuckoo, cfg.n_buckets
+        # scale; the cuckoo path applies eviction DELETIONS to the filter).
+        # The filter was committed with last round's seen delta (and evict()
+        # already removed tombstoned cuckoo fingerprints) — it is built from
+        # the live seen set only when no filter table exists yet, so there
+        # is no O(|seen|) rebuild on the hot path.
+        flt = _seen_filter(cfg)
+        if flt is not None:
+            flt_table, flt_build, flt_insert, flt_probe, flt_floor = flt
+            filt = (
+                storage.read(flt_table)
+                if storage.latest_snapshot(flt_table) is not None
+                else flt_build(seen, cfg.n_buckets, flt_floor)
             )
-        elif cfg.use_bloom:
-            if cfg.bloom_incremental and storage.latest_snapshot("bloom") is not None:
-                # the filter was committed with last round's seen delta —
-                # no O(|seen|) rebuild on the hot path
-                bloom = storage.read("bloom")
-                prow = bloom.select("n_bits", "n_hashes").first()
-                bloom_sizing = (
-                    (int(prow["n_bits"]), int(prow["n_hashes"])) if prow else None
-                )
-            else:
-                bloom = D.build_bloom(
-                    seen, cfg.n_buckets, cfg.bloom_expected_per_bucket
-                )
-                bloom_sizing = None
-            if cfg.bloom_partitioned:
-                candidates = D.seen_anti_join_bloom_partitioned(
-                    frontier, seen, bloom, cfg.n_buckets
-                )
-            else:
-                candidates = D.seen_anti_join_bloom(
-                    frontier, seen, bloom, cfg.n_buckets
-                )
-        else:
-            candidates = D.seen_anti_join(frontier, seen)
+
+        def minus_seen(df: DataFrame) -> DataFrame:
+            if flt is None:
+                return D.seen_anti_join(df, seen)
+            return flt_probe(df, seen, filt, cfg.n_buckets)
+
+        candidates = minus_seen(frontier)
 
         # 2. robots gate (broadcast) + 3. politeness priority queue.
         # `candidates` (pre-gate) is reused below as the frontier remainder
@@ -458,24 +441,12 @@ class Crawler:
         succ_new = succ.join(
             seen_delta.select("url_hash"), on="url_hash", how="left_anti"
         )
-        # the "minus old seen" leg goes through the SAME prefilter family as
-        # the candidates anti-join: without it, this one join would still
+        # the "minus old seen" leg goes through the SAME prefilter as the
+        # candidates anti-join: without it, this one join would still
         # shuffle the full 10^10-row seen set every round even with the
         # bloom/cuckoo paths on (the filters are row-identical to the exact
         # join, so the frontier is unchanged — golden-tested)
-        if cfg.use_cuckoo:
-            succ_new = D.seen_anti_join_cuckoo(succ_new, seen, cuckoo, cfg.n_buckets)
-        elif cfg.use_bloom:
-            if cfg.bloom_partitioned:
-                succ_new = D.seen_anti_join_bloom_partitioned(
-                    succ_new, seen, bloom, cfg.n_buckets
-                )
-            else:
-                succ_new = D.seen_anti_join_bloom(succ_new, seen, bloom, cfg.n_buckets)
-        else:
-            succ_new = succ_new.join(
-                seen.select("url_hash"), on="url_hash", how="left_anti"
-            )
+        succ_new = minus_seen(succ_new)
         next_frontier = FR.dedup_frontier(
             remainder.unionByName(retries).unionByName(succ_new)
         )
@@ -505,29 +476,14 @@ class Crawler:
             stage_jobs.append(
                 lambda: storage.stage_append("media_meta", media_meta)
             )
-        if cfg.use_bloom and not cfg.use_cuckoo and cfg.bloom_incremental:
-            # OR the round's delta into the persisted filter — O(delta)
+        if flt is not None:
+            # insert the round's delta into the persisted filter — O(delta)
             # work, committed in the same flip as the seen delta itself so
             # the filter and the set can never diverge across a crash
-            delta_bloom = D.build_bloom(
-                seen_delta, cfg.n_buckets, cfg.bloom_expected_per_bucket,
-                params=bloom_sizing,
-            )
             stage_jobs.append(
                 lambda: storage.stage_overwrite(
-                    "bloom", D.merge_blooms(bloom, delta_bloom)
-                )
-            )
-        if cfg.use_cuckoo and cfg.cuckoo_incremental:
-            # bulk-insert the round's delta into the persisted filter —
-            # same O(delta) discipline and same atomic flip as the bloom
-            stage_jobs.append(
-                lambda: storage.stage_overwrite(
-                    "cuckoo",
-                    D.cuckoo_insert(
-                        cuckoo, seen_delta, cfg.n_buckets,
-                        cfg.cuckoo_capacity_per_bucket,
-                    ),
+                    flt_table,
+                    flt_insert(filt, seen_delta, cfg.n_buckets, flt_floor),
                 )
             )
         if evicted is not None:
@@ -560,11 +516,9 @@ class Crawler:
         # passes; other tables expire in the maintenance block below
         if cfg.expire_keep_last:
             storage.expire_snapshots("frontier", keep_last=cfg.expire_keep_last)
-            if storage.latest_snapshot("bloom") is not None:
-                # like frontier, the bloom table is overwritten per round
-                storage.expire_snapshots("bloom", keep_last=cfg.expire_keep_last)
-            if storage.latest_snapshot("cuckoo") is not None:
-                storage.expire_snapshots("cuckoo", keep_last=cfg.expire_keep_last)
+            if flt is not None:
+                # like frontier, the filter table is overwritten per round
+                storage.expire_snapshots(flt_table, keep_last=cfg.expire_keep_last)
 
         # maintenance: fold append/MoR deltas periodically (size-tiered for
         # the append tables, touched-buckets-only for documents) and expire
@@ -574,23 +528,12 @@ class Crawler:
             storage.compact("fetch_log")
             storage.compact("documents")
             storage.compact("media_meta")
-            if cfg.use_bloom and not cfg.use_cuckoo and cfg.bloom_incremental:
-                # full rebuild RESIZES the filter to the grown seen set so
-                # fpp stays bounded over a long crawl (the incremental ORs
-                # keep the size fixed between rebuilds)
-                seen_now = storage.read("seen")
-                per_bucket = max(
-                    cfg.bloom_expected_per_bucket,
-                    int(seen_now.count() * 1.25) // max(cfg.n_buckets, 1) + 1,
-                )
-                storage.commit(
-                    "bloom",
-                    D.build_bloom(seen_now, cfg.n_buckets, per_bucket),
-                )
-            if cfg.use_cuckoo and cfg.cuckoo_incremental:
+            if flt is not None:
                 # rebuild from the LIVE seen set (minus pending eviction
-                # tombstones), resized so overflowed buckets recover and
-                # load factor stays at design level over a long crawl
+                # tombstones), RESIZED to it so fpp stays bounded, cuckoo
+                # buckets that overflowed recover, and load stays at design
+                # level over a long crawl (inserts keep the size fixed
+                # between rebuilds)
                 seen_now = storage.read("seen")
                 if storage.latest_snapshot("evicted") is not None:
                     seen_now = seen_now.join(
@@ -598,12 +541,11 @@ class Crawler:
                         on="url_hash", how="left_anti",
                     )
                 per_bucket = max(
-                    cfg.cuckoo_capacity_per_bucket,
+                    flt_floor,
                     int(seen_now.count() * 1.25) // max(cfg.n_buckets, 1) + 1,
                 )
                 storage.commit(
-                    "cuckoo",
-                    D.build_cuckoo(seen_now, cfg.n_buckets, per_bucket),
+                    flt_table, flt_build(seen_now, cfg.n_buckets, per_bucket)
                 )
             if cfg.expire_keep_last:
                 for t in ("seen", "fetch_log", "documents", "media_meta", "evicted"):

@@ -1,20 +1,24 @@
-"""URL-seen set: exact anti-join + partitioned-bloom prefilter (J1).
+"""URL-seen set: exact anti-join + partitioned bloom / cuckoo prefilter (J1).
 
 The reference dedups via DB unique constraints and ``sorted(set(ids))``
 (reference: core/spider.py:218-236, utils/helper.py:55,
 spiders/bilibili/downloader.py:295).  At 10^10 URLs the exact seen table is
-hash-bucketed by ``pmod(url_hash, n_buckets)`` and fronted by per-bucket
-bloom bitmaps built in an Arrow-batched ``applyInPandas`` aggregation
+hash-bucketed by ``pmod(url_hash, n_buckets)`` and fronted by a per-bucket
+filter table — bloom bitmaps, or cuckoo filters when URLs must be deleted
 (Spark's ``bloom_filter_agg`` is JVM-internal and not persistable, SURVEY
-§4.3.1).  Bloom *pass* (possibly-seen) rows are always exact-confirmed
-against their bucket before being dropped, so false positives can never
-lose a URL — the bloom only shrinks the exact join's probe side.
+§4.3.1).  Both filters have the same shape: a build (``applyInPandas``
+aggregation), an O(delta) cogrouped insert, and ONE shared cogrouped probe
+(:func:`_filtered_anti_join`) that differs only in the per-bucket
+membership test.  No filter state is ever collected to the driver or
+broadcast.  Possibly-seen rows are always exact-confirmed against the seen
+set before being dropped, so false positives can never lose a URL — the
+filter only shrinks the exact join's probe side.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -32,6 +36,50 @@ def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
 def seen_anti_join(frontier: DataFrame, seen: DataFrame) -> DataFrame:
     """Exact path: frontier ⟕̸ seen on the 64-bit canonical-URL hash."""
     return frontier.join(seen.select("url_hash"), on="url_hash", how="left_anti")
+
+
+# ---------------------------------------------------------------------------
+# The one probe kernel both filters share.  The frontier is shuffled by
+# bucket once and each bucket's slice meets its filter row in a cogrouped
+# applyInPandas — the filter table stays distributed (at 10^10 keys it is
+# GBs, too big for the driver).  Rows the filter calls possibly-seen are
+# exact-confirmed against the seen set; a bucket with no filter row has
+# never seen a URL, so its whole slice is new.
+
+
+def _filtered_anti_join(
+    frontier: DataFrame,
+    seen: DataFrame,
+    filters: DataFrame,
+    n_buckets: int,
+    maybe_seen: Callable[[pd.Series, np.ndarray], np.ndarray],
+) -> DataFrame:
+    """``maybe_seen(filter_row, url_hashes) -> bool array`` is the filter's
+    membership test; it may answer True for unseen hashes, never False for
+    seen ones."""
+    fb = with_bucket(frontier, n_buckets)
+    out_schema = fb.withColumn("_maybe", F.lit(True)).schema
+    out_cols = [f.name for f in out_schema.fields]
+
+    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if len(left) == 0:
+            return pd.DataFrame(columns=out_cols)
+        if len(right) == 0:
+            return left.assign(_maybe=False)[out_cols]
+        hit = maybe_seen(right.iloc[0], left["url_hash"].to_numpy(np.int64))
+        return left.assign(_maybe=hit)[out_cols]
+
+    probed = (
+        fb.groupby("bucket")
+        .cogroup(filters.groupby("bucket"))
+        .applyInPandas(probe, schema=out_schema)
+    )
+    definitely_new = probed.filter(~F.col("_maybe")).drop("_maybe", "bucket")
+    maybe_seen_rows = probed.filter(F.col("_maybe")).drop("_maybe", "bucket")
+    confirmed_new = maybe_seen_rows.join(
+        seen.select("url_hash"), on="url_hash", how="left_anti"
+    )
+    return definitely_new.unionByName(confirmed_new)
 
 
 # ---------------------------------------------------------------------------
@@ -59,112 +107,84 @@ def bloom_params(expected_per_bucket: int, fpp: float = 0.01) -> tuple[int, int]
     return n_bits, min(n_hashes, 16)
 
 
+BLOOM_SCHEMA = "bucket int, n_bits int, n_hashes int, bits binary"
+
+
+def _set_bits(bits: np.ndarray, hashes: np.ndarray, n_bits: int, n_hashes: int) -> None:
+    flat = _positions(hashes, n_bits, n_hashes).ravel()
+    np.bitwise_or.at(bits, flat // 8, (1 << (flat % 8)).astype(np.uint8))
+
+
+def _bloom_row(bucket: int, n_bits: int, n_hashes: int, bits: np.ndarray) -> pd.DataFrame:
+    return pd.DataFrame(
+        {"bucket": [bucket], "n_bits": [n_bits], "n_hashes": [n_hashes],
+         "bits": [bits.tobytes()]}
+    )
+
+
 def build_bloom(
     seen: DataFrame,
     n_buckets: int = DEFAULT_BUCKETS,
     expected_per_bucket: int = 10_000,
     fpp: float = 0.01,
-    params: tuple[int, int] | None = None,
 ) -> DataFrame:
-    """Per-bucket bloom bitmaps over seen.url_hash (applyInPandas UDAF).
-
-    ``params`` pins (n_bits, n_hashes) explicitly — required when building
-    a DELTA bloom that must OR-merge into an existing table whose sizing
-    may differ from the config (see :func:`merge_blooms`)."""
-    n_bits, n_hashes = params or bloom_params(expected_per_bucket, fpp)
+    """Per-bucket bloom bitmaps over seen.url_hash (applyInPandas UDAF)."""
+    n_bits, n_hashes = bloom_params(expected_per_bucket, fpp)
 
     def agg(pdf: pd.DataFrame) -> pd.DataFrame:
         bits = np.zeros(n_bits // 8, dtype=np.uint8)
-        pos = _positions(pdf["url_hash"].to_numpy(np.int64), n_bits, n_hashes)
-        flat = pos.ravel()
-        np.bitwise_or.at(bits, flat // 8, (1 << (flat % 8)).astype(np.uint8))
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["bucket"].iloc[0])],
-                "n_bits": [n_bits],
-                "n_hashes": [n_hashes],
-                "bits": [bits.tobytes()],
-            }
-        )
+        _set_bits(bits, pdf["url_hash"].to_numpy(np.int64), n_bits, n_hashes)
+        return _bloom_row(int(pdf["bucket"].iloc[0]), n_bits, n_hashes, bits)
 
     bucketed = with_bucket(seen.select("url_hash"), n_buckets)
-    return bucketed.groupBy("bucket").applyInPandas(
-        agg, schema="bucket int, n_bits int, n_hashes int, bits binary"
-    )
+    return bucketed.groupBy("bucket").applyInPandas(agg, schema=BLOOM_SCHEMA)
 
 
-def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Bitwise-OR union of two per-bucket bloom tables: bloom(S ∪ D) =
-    bloom(S) | bloom(D) for same-sized filters.
+def bloom_insert(
+    bloom: DataFrame,
+    additions: DataFrame,
+    n_buckets: int = DEFAULT_BUCKETS,
+    expected_per_bucket: int = 10_000,
+    fpp: float = 0.01,
+) -> DataFrame:
+    """Set the bits of url_hashes in the per-bucket bitmaps — the O(delta)
+    incremental-maintenance path (mirrors :func:`cuckoo_insert`).
 
-    Blooms are mergeable sketches, which makes the seen filter
-    INCREMENTALLY maintainable: the engine ORs in a bloom built from just
-    the round's seen DELTA (O(delta) work) instead of re-scanning the
-    10^10-row seen set every round; a full rebuild (which also resizes the
-    filter as the crawl grows) happens only at the periodic compaction.
-    A size mismatch raises — that means the stored table needs a rebuild.
+    Cogrouped applyInPandas: each bucket's bitmap meets only its own
+    additions and keeps its stored ``n_bits``/``n_hashes`` (a compaction
+    rebuild may have resized it away from the config); untouched buckets
+    pass through.  A bucket with additions but no bitmap yet gets a fresh
+    one sized from ``expected_per_bucket``, exactly as :func:`build_bloom`
+    would size it, so insert(build(A), B) is bit-identical to build(A ∪ B).
     """
+    adds = with_bucket(additions.select("url_hash"), n_buckets)
+    fresh_bits, fresh_hashes = bloom_params(expected_per_bucket, fpp)
 
-    def orit(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return right
-        if len(right) == 0:
-            return left
-        la = np.frombuffer(bytes(left["bits"].iloc[0]), np.uint8)
-        rb = np.frombuffer(bytes(right["bits"].iloc[0]), np.uint8)
-        if len(la) != len(rb):
-            raise ValueError(
-                "bloom bitmap size mismatch — rebuild the stored bloom"
-            )
-        return left.assign(bits=[np.bitwise_or(la, rb).tobytes()])
+    def apply_ins(filters: pd.DataFrame, toadd: pd.DataFrame) -> pd.DataFrame:
+        if len(toadd) == 0:
+            return filters
+        if len(filters) == 0:
+            n_bits, n_hashes = fresh_bits, fresh_hashes
+            bits = np.zeros(n_bits // 8, dtype=np.uint8)
+        else:
+            n_bits = int(filters["n_bits"].iloc[0])
+            n_hashes = int(filters["n_hashes"].iloc[0])
+            bits = np.frombuffer(bytes(filters["bits"].iloc[0]), np.uint8).copy()
+        _set_bits(bits, toadd["url_hash"].to_numpy(np.int64), n_bits, n_hashes)
+        return _bloom_row(int(toadd["bucket"].iloc[0]), n_bits, n_hashes, bits)
 
     return (
-        a.groupby("bucket")
-        .cogroup(b.groupby("bucket"))
-        .applyInPandas(orit, schema="bucket int, n_bits int, n_hashes int, bits binary")
+        bloom.groupby("bucket")
+        .cogroup(adds.groupby("bucket"))
+        .applyInPandas(apply_ins, schema=BLOOM_SCHEMA)
     )
 
 
-def bloom_prefilter(
-    frontier: DataFrame, bloom: DataFrame, n_buckets: int = DEFAULT_BUCKETS
-) -> tuple[DataFrame, DataFrame]:
-    """Split frontier into (definitely_new, maybe_seen) via the bloom bitmaps.
-
-    Broadcast the bitmap table (n_buckets rows, ~n_bits/8 bytes each) and
-    probe inside mapInPandas — no shuffle of the frontier at all.
-    """
-    probed_schema = frontier.withColumn("_maybe", F.lit(True)).schema
-
-    bloom_rows = {
-        int(r["bucket"]): (int(r["n_bits"]), int(r["n_hashes"]), np.frombuffer(r["bits"], np.uint8))
-        for r in bloom.collect()
-    }
-    spark = frontier.sparkSession
-    bc = spark.sparkContext.broadcast(bloom_rows)
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        filters = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            h = pdf["url_hash"].to_numpy(np.int64)
-            bucket = np.mod(h, n_buckets)
-            maybe = np.zeros(len(pdf), dtype=bool)
-            for b in np.unique(bucket):
-                f = filters.get(int(b))
-                if f is None:
-                    continue
-                n_bits, n_hashes, bits = f
-                idx = np.nonzero(bucket == b)[0]
-                pos = _positions(h[idx], n_bits, n_hashes)
-                hit = (bits[pos // 8] & (1 << (pos % 8)).astype(np.uint8)) != 0
-                maybe[idx] = hit.all(axis=0)
-            yield pdf.assign(_maybe=maybe)
-
-    probed = frontier.mapInPandas(probe, schema=probed_schema)
-    definitely_new = probed.filter(~F.col("_maybe")).drop("_maybe")
-    maybe_seen = probed.filter(F.col("_maybe")).drop("_maybe")
-    return definitely_new, maybe_seen
+def _bloom_contains(row: pd.Series, hashes: np.ndarray) -> np.ndarray:
+    n_bits, n_hashes = int(row["n_bits"]), int(row["n_hashes"])
+    bits = np.frombuffer(bytes(row["bits"]), np.uint8)
+    pos = _positions(hashes, n_bits, n_hashes)
+    return ((bits[pos // 8] & (1 << (pos % 8)).astype(np.uint8)) != 0).all(axis=0)
 
 
 def seen_anti_join_bloom(
@@ -173,67 +193,10 @@ def seen_anti_join_bloom(
     bloom: DataFrame,
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
-    """Bloom-accelerated anti-join: exact-confirm only the bloom-pass rows.
-
-    Output is row-identical to :func:`seen_anti_join` — the bloom can only
-    send extra rows to the exact confirm, never skip one.
-    """
-    definitely_new, maybe_seen = bloom_prefilter(frontier, bloom, n_buckets)
-    confirmed_new = maybe_seen.join(
-        seen.select("url_hash"), on="url_hash", how="left_anti"
-    )
-    return definitely_new.unionByName(confirmed_new)
-
-
-# ---------------------------------------------------------------------------
-# Partition-wise bloom probe (no driver collect): at 10^10 keys the bitmap
-# table is GBs — too big to broadcast.  Instead the frontier is shuffled by
-# bucket once and probed against its bucket's bitmap via a cogrouped
-# applyInPandas; the bloom table rows stay distributed.
-
-
-def bloom_prefilter_partitioned(
-    frontier: DataFrame, bloom: DataFrame, n_buckets: int = DEFAULT_BUCKETS
-) -> tuple[DataFrame, DataFrame]:
-    """Partition-wise twin of :func:`bloom_prefilter` — one shuffle of the
-    frontier by bucket, zero driver-side state."""
-    fb = with_bucket(frontier, n_buckets)
-    out_schema = fb.withColumn("_maybe", F.lit(True)).schema
-    out_cols = [f.name for f in out_schema.fields]
-
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame(columns=out_cols)
-        if len(right) == 0:
-            return left.assign(_maybe=False)[out_cols]
-        n_bits = int(right["n_bits"].iloc[0])
-        n_hashes = int(right["n_hashes"].iloc[0])
-        bits = np.frombuffer(right["bits"].iloc[0], np.uint8)
-        pos = _positions(left["url_hash"].to_numpy(np.int64), n_bits, n_hashes)
-        hit = (bits[pos // 8] & (1 << (pos % 8)).astype(np.uint8)) != 0
-        return left.assign(_maybe=hit.all(axis=0))[out_cols]
-
-    probed = (
-        fb.groupby("bucket")
-        .cogroup(bloom.groupby("bucket"))
-        .applyInPandas(probe, schema=out_schema)
-    )
-    definitely_new = probed.filter(~F.col("_maybe")).drop("_maybe", "bucket")
-    maybe_seen = probed.filter(F.col("_maybe")).drop("_maybe", "bucket")
-    return definitely_new, maybe_seen
-
-
-def seen_anti_join_bloom_partitioned(
-    frontier: DataFrame,
-    seen: DataFrame,
-    bloom: DataFrame,
-    n_buckets: int = DEFAULT_BUCKETS,
-) -> DataFrame:
-    definitely_new, maybe_seen = bloom_prefilter_partitioned(frontier, bloom, n_buckets)
-    confirmed_new = maybe_seen.join(
-        seen.select("url_hash"), on="url_hash", how="left_anti"
-    )
-    return definitely_new.unionByName(confirmed_new)
+    """Bloom-prefiltered anti-join: row-identical to :func:`seen_anti_join`
+    — the bloom can only send extra rows to the exact confirm, never skip
+    one."""
+    return _filtered_anti_join(frontier, seen, bloom, n_buckets, _bloom_contains)
 
 
 # ---------------------------------------------------------------------------
@@ -421,7 +384,7 @@ def cuckoo_insert(
     capacity_per_bucket: int = 10_000,
 ) -> DataFrame:
     """Bulk-insert url_hashes into the per-bucket filters — the O(delta)
-    incremental-maintenance path (mirrors ``merge_blooms`` for the bloom).
+    incremental-maintenance path (mirrors :func:`bloom_insert`).
 
     Cogrouped applyInPandas: each bucket's filter meets only its own
     additions; untouched buckets pass through by reference.  A bucket with
@@ -495,42 +458,20 @@ def cuckoo_delete(cuckoo: DataFrame, deletions: DataFrame,
     )
 
 
+def _cuckoo_contains(row: pd.Series, hashes: np.ndarray) -> np.ndarray:
+    if bool(row["overflowed"]):
+        # filter is lossy for this bucket: exact-confirm everything
+        return np.ones(len(hashes), dtype=bool)
+    return CuckooFilter.from_bytes(bytes(row["table"])).contains(hashes)
+
+
 def seen_anti_join_cuckoo(
     frontier: DataFrame,
     seen: DataFrame,
     cuckoo: DataFrame,
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
-    """Cuckoo-prefiltered anti-join (cogrouped probe + exact confirm).
-
-    Like the bloom path, the filter only shrinks the exact join's probe
-    side; false positives are exact-confirmed, so output is row-identical
-    to :func:`seen_anti_join` over the same live (non-deleted) seen set.
-    """
-    fb = with_bucket(frontier, n_buckets)
-    out_schema = fb.withColumn("_maybe", F.lit(True)).schema
-    out_cols = [f.name for f in out_schema.fields]
-
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame(columns=out_cols)
-        if len(right) == 0:
-            return left.assign(_maybe=False)[out_cols]
-        if bool(right["overflowed"].iloc[0]):
-            # filter is lossy for this bucket: exact-confirm everything
-            return left.assign(_maybe=True)[out_cols]
-        f = CuckooFilter.from_bytes(bytes(right["table"].iloc[0]))
-        hit = f.contains(left["url_hash"].to_numpy(np.int64))
-        return left.assign(_maybe=hit)[out_cols]
-
-    probed = (
-        fb.groupby("bucket")
-        .cogroup(cuckoo.groupby("bucket"))
-        .applyInPandas(probe, schema=out_schema)
-    )
-    definitely_new = probed.filter(~F.col("_maybe")).drop("_maybe", "bucket")
-    maybe_seen = probed.filter(F.col("_maybe")).drop("_maybe", "bucket")
-    confirmed_new = maybe_seen.join(
-        seen.select("url_hash"), on="url_hash", how="left_anti"
-    )
-    return definitely_new.unionByName(confirmed_new)
+    """Cuckoo-prefiltered anti-join: like the bloom path, output is
+    row-identical to :func:`seen_anti_join` over the same live
+    (non-deleted) seen set."""
+    return _filtered_anti_join(frontier, seen, cuckoo, n_buckets, _cuckoo_contains)

@@ -125,7 +125,9 @@ MEDIA_META = T.StructType(
 )
 
 # Persisted per-bucket bloom bitmaps over the seen set, maintained
-# INCREMENTALLY (OR-merge of the round's delta bloom — O(delta)/round) and
+# INCREMENTALLY (the round's seen delta is inserted cogrouped into each
+# bucket's bitmap at its stored n_bits/n_hashes — O(delta)/round; probed by
+# the same cogrouped kernel as CUCKOO, never broadcast) and
 # rebuilt+resized at compaction.  Committed in the same atomic flip as
 # seen, so the filter can never lag or lead the set it summarizes.
 BLOOM = T.StructType(

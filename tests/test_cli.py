@@ -74,6 +74,20 @@ def test_crawl_synthetic_and_warehouse_schema(capsys, tmp_path):
     assert "documents" in out and "fetch_log" in out and "snap=" in out
 
 
+def test_crawl_rejects_two_seen_filters(tmp_path):
+    """Bloom and cuckoo are exclusive: the config raises instead of silently
+    running one of them, and the CLI exits with that message before any
+    crawl work."""
+    from spiders_for_all_spark.engine import CrawlConfig
+
+    with pytest.raises(ValueError, match="exclusive"):
+        CrawlConfig(use_bloom=True, use_cuckoo=True)
+    wh = tmp_path / "wh"
+    with pytest.raises(SystemExit, match="use_bloom and use_cuckoo are exclusive"):
+        main(["crawl", "--synthetic", "--bloom", "--cuckoo", "--warehouse", str(wh)])
+    assert not wh.exists()
+
+
 def test_download_by_sql_streams_to_file_sink(spark, tmp_path):
     rows, _seeds = FX.build_site(n_hosts=2, pages_per_chain=2, seed=11)
     site = os.path.join(tempfile.mkdtemp(), "pages.parquet")

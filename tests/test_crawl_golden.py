@@ -82,7 +82,7 @@ def world(tmp_path_factory):
     }
 
 
-def run_engine(spark, world, tmp, *, budget, use_bloom=False, bloom_partitioned=False,
+def run_engine(spark, world, tmp, *, budget, use_bloom=False,
                salt_n=1, max_attempts=3, use_cuckoo=False):
     storage = SnapshotStorage(spark, str(tmp))
     cfg = CrawlConfig(
@@ -91,7 +91,6 @@ def run_engine(spark, world, tmp, *, budget, use_bloom=False, bloom_partitioned=
         max_attempts=max_attempts,
         max_depth=3,
         use_bloom=use_bloom,
-        bloom_partitioned=bloom_partitioned,
         use_cuckoo=use_cuckoo,
         salt_n=salt_n,
         n_buckets=8,
@@ -169,25 +168,17 @@ def test_crawl_matches_simulator(spark, world, tmp_path, budget):
 
 
 def test_crawl_bloom_path_identical(spark, world, tmp_path):
-    """Bloom prefilter + exact confirm must not change any outcome — both
-    the broadcast-bitmap path and the cogrouped partition-wise path."""
+    """The cogrouped partitioned-bloom prefilter + exact confirm must not
+    change any outcome."""
     s1, _ = run_engine(spark, world, tmp_path / "exact", budget=2)
     s2, _ = run_engine(spark, world, tmp_path / "bloom", budget=2, use_bloom=True)
-    s3, _ = run_engine(
-        spark, world, tmp_path / "bloomp", budget=2,
-        use_bloom=True, bloom_partitioned=True,
-    )
     d1 = sorted(
         (r["round"], r["url"]) for r in s1.read("fetch_log").collect()
     )
     d2 = sorted(
         (r["round"], r["url"]) for r in s2.read("fetch_log").collect()
     )
-    d3 = sorted(
-        (r["round"], r["url"]) for r in s3.read("fetch_log").collect()
-    )
     assert d1 == d2
-    assert d1 == d3
 
 
 def test_crawl_salted_scheduling_identical(spark, world, tmp_path):
@@ -285,49 +276,55 @@ def test_balanced_fetch_partitioning_identical(spark, world, tmp_path):
     assert docs_a == docs_b
 
 
-def test_cuckoo_incremental_no_full_rebuild(spark, world, tmp_path, monkeypatch):
-    """Steady-state cuckoo rounds must NOT rebuild the filter from the full
-    seen set: build_cuckoo runs at most once (the bootstrap, before any
-    'cuckoo' table exists); every later round reads the committed filter
-    and bulk-inserts only the round's seen delta (O(delta)/round)."""
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_cuckoo_incremental_no_full_rebuild(spark, world, tmp_path, monkeypatch, kind):
+    """Steady-state filter rounds must NOT rebuild the filter from the full
+    seen set: the build runs exactly once (the bootstrap, before any filter
+    table exists); every later round reads the committed filter and inserts
+    only the round's seen delta (O(delta)/round).  Exactly, not at most:
+    zero calls would mean the engine bypassed the patched builder."""
     from spiders_for_all_spark import engine as ENG
 
     calls: list[int] = []
-    orig = ENG.D.build_cuckoo
+    orig = getattr(ENG.D, f"build_{kind}")
 
     def counting(*a, **k):
         calls.append(1)
         return orig(*a, **k)
 
-    monkeypatch.setattr(ENG.D, "build_cuckoo", counting)
+    monkeypatch.setattr(ENG.D, f"build_{kind}", counting)
     storage, stats = run_engine(
-        spark, world, tmp_path / "cuckoo_inc", budget=2, use_cuckoo=True
+        spark, world, tmp_path / f"{kind}_inc", budget=2, **{f"use_{kind}": True}
     )
     assert len(stats.rounds) >= 3, "need a multi-round crawl to prove it"
-    assert len(calls) <= 1, f"full filter rebuild ran {len(calls)} times"
-    assert storage.latest_snapshot("cuckoo") is not None
+    assert len(calls) == 1, f"filter build ran {len(calls)} times"
+    assert storage.latest_snapshot(kind) is not None
 
 
-def test_cuckoo_with_compaction_identical(spark, world, tmp_path):
+@pytest.mark.parametrize("flag", ["use_bloom", "use_cuckoo"])
+def test_cuckoo_with_compaction_identical(spark, world, tmp_path, flag):
     """The periodic compaction rebuild (resize from the live seen set)
-    slots into a running cuckoo crawl without changing a single fetch, and
-    leaves no overflowed buckets."""
+    slots into a running filtered crawl without changing a single fetch,
+    and leaves no overflowed cuckoo buckets."""
     ref_storage, _ = run_engine(spark, world, tmp_path / "ckc_ref", budget=2)
     storage = SnapshotStorage(spark, str(tmp_path / "ckc"))
     cfg = CrawlConfig(
-        max_rounds=40, default_budget=2, max_depth=3, use_cuckoo=True,
-        n_buckets=8, cuckoo_capacity_per_bucket=64, compact_every=3,
-        expire_keep_last=2,
+        max_rounds=40, default_budget=2, max_depth=3, n_buckets=8,
+        bloom_expected_per_bucket=64, cuckoo_capacity_per_bucket=64,
+        compact_every=3, expire_keep_last=2, **{flag: True},
     )
     c = Crawler(
         spark, storage, SyntheticFetcher(world["site_path"], partitions=4), cfg
     )
-    c.run(seeds=world["seeds"])
+    stats = c.run(seeds=world["seeds"])
+    assert len(stats.rounds) > cfg.compact_every, "compaction never ran"
     a = sorted((r["round"], r["url"]) for r in storage.read("fetch_log").collect())
     b = sorted((r["round"], r["url"]) for r in ref_storage.read("fetch_log").collect())
     assert a == b
-    ck = storage.read("cuckoo").collect()
-    assert ck and not any(r["overflowed"] for r in ck)
+    table = storage.read(flag.removeprefix("use_")).collect()
+    assert table
+    if flag == "use_cuckoo":
+        assert not any(r["overflowed"] for r in table)
 
 
 def test_evict_mid_crawl_preserves_pending(spark, world, tmp_path):

@@ -39,7 +39,7 @@ def test_bloom_partitioned_equals_exact(spark, hashes, frontier_like):
     bloom = D.build_bloom(hashes, n_buckets=8, expected_per_bucket=128)
     got = sorted(
         r["url"]
-        for r in D.seen_anti_join_bloom_partitioned(
+        for r in D.seen_anti_join_bloom(
             frontier_like, hashes, bloom, n_buckets=8
         ).collect()
     )
@@ -143,27 +143,38 @@ def test_cuckoo_build_sizes_from_actual_rows(spark):
     assert got == 4000
 
 
-def test_merge_blooms_equals_full_build(spark, hashes):
-    """bloom(A) | bloom(B) is bit-identical to bloom(A ∪ B) — the property
-    the engine's incremental O(delta)/round filter maintenance rests on."""
+def test_bloom_insert_equals_full_build(spark, hashes):
+    """bloom_insert(bloom(A), B) is bit-identical per bucket to bloom(A ∪ B)
+    — the property the engine's incremental O(delta)/round filter
+    maintenance rests on — including a bucket only B populates."""
     # split on sign, NOT parity: parity correlates with pmod(hash, 8), which
-    # would make the two blooms' buckets disjoint and never exercise the OR
-    a = hashes.filter(F.col("url_hash") > 0)
-    b = hashes.filter(F.col("url_hash") <= 0)
-    merged = {
-        r["bucket"]: bytes(r["bits"])
-        for r in D.merge_blooms(
-            D.build_bloom(a, 8, 64), D.build_bloom(b, 8, 64)
-        ).collect()
-    }
-    full = {
-        r["bucket"]: bytes(r["bits"]) for r in D.build_bloom(hashes, 8, 64).collect()
-    }
-    assert merged == full
+    # would make A's and B's buckets disjoint and never insert into an
+    # existing bitmap; bucket 7 is moved wholly to B so that B also hits a
+    # bucket A never created (the fresh-filter path)
+    bucket7 = F.pmod(F.col("url_hash"), F.lit(8)) == 7
+    a = hashes.filter((F.col("url_hash") > 0) & ~bucket7)
+    b = hashes.filter((F.col("url_hash") <= 0) | bucket7)
 
-    # size mismatch must fail loudly, not silently corrupt the filter
-    with pytest.raises(Exception, match="(?s)size mismatch"):
-        D.merge_blooms(D.build_bloom(a, 8, 64), D.build_bloom(b, 8, 4096)).collect()
+    def by_bucket(bloom):
+        return {
+            r["bucket"]: (r["n_bits"], r["n_hashes"], bytes(r["bits"]))
+            for r in bloom.collect()
+        }
+
+    base = D.build_bloom(a, 8, 64)
+    assert 7 not in by_bucket(base)
+    inserted = by_bucket(D.bloom_insert(base, b, 8, 64))
+    full = by_bucket(D.build_bloom(hashes, 8, 64))
+    assert sorted(inserted) == list(range(8))
+    assert inserted == full
+
+    # an existing bucket keeps its STORED sizing, whatever the config says
+    # (a compaction rebuild may have resized it)
+    big = by_bucket(D.build_bloom(a, 8, 4096))
+    regrown = by_bucket(D.bloom_insert(D.build_bloom(a, 8, 4096), b, 8, 64))
+    for bucket, (n_bits, n_hashes, _bits) in big.items():
+        assert regrown[bucket][:2] == (n_bits, n_hashes)
+    assert regrown[7][:2] == full[7][:2]
 
 
 def test_media_sink_streams_to_files(spark, tmp_path):
